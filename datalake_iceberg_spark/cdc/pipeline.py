@@ -17,12 +17,17 @@ batch processor as composable DataFrame transforms:
    batch to the final state. MERGE forbids duplicate source keys, so this
    must run before every merge.
 5. ``split_upserts_deletes`` — op-code split (``cdc_pipeline.py:206-207``).
-6. ``apply_cdc_changes`` — MERGE upserts, then DELETE the delete-set
-   (``cdc_pipeline.py:221-251``) against a :class:`LakeTable`.
+6. ``apply_cdc_changes`` — MERGE the upserts and DELETE the delete-set
+   (``cdc_pipeline.py:221-251``) against a :class:`LakeTable` in ONE
+   commit: ``merge(upserts, deletes=keys)`` rewrites each touched bucket
+   once (copy-on-write) or lands the upsert dirs and the delete-key
+   dirs in one snapshot (merge-on-read), so readers never see half a
+   batch.
 
 Scale notes: steps 1-3 and 5 are stateless projections/filters (codegen,
-no shuffle). Step 4 shuffles once on ``id_iceberg`` — the same shuffle the
-MERGE join needs, so AQE can reuse the exchange. The merge rewrites only
+no shuffle). Step 4 shuffles once on ``id_iceberg``; step 6 persists the
+deduped batch once (size-gated) so that shuffle is not re-run by the
+emptiness check, the probe and the writes. The merge rewrites only
 key-hash buckets touched by the batch.
 """
 
@@ -41,6 +46,8 @@ from datalake_iceberg_spark.tables import LakeTable
 OP_COL = "__op"
 OFFSET_COL = "__offset"
 META_COLS = (OP_COL, OFFSET_COL)
+#: tags the delete half of a batch inside ``apply_cdc_changes``
+DELETE_FLAG_COL = "__delete"
 
 
 def flatten_envelope(
@@ -138,30 +145,65 @@ def apply_cdc_changes(
     txn_app: str | None = None,
     txn_version: int | None = None,
 ) -> dict:
-    """MERGE the upserts, DELETE the delete-set (reference
-    ``cdc_pipeline.py:221-251``). Dedup already guarantees unique keys.
+    """Apply one deduped micro-batch as ONE commit: the upserts MERGE
+    and the delete-set DELETE (reference ``cdc_pipeline.py:221-251``,
+    which issues them as two statements) land through a single
+    ``merge(upserts, deletes=keys)`` — one rewrite and one snapshot, so
+    no reader sees the upserts without the deletes. A delete-only batch
+    goes through ``delete_keys``; an empty one commits nothing. Dedup
+    already guarantees unique keys.
 
-    ``mode`` selects the write strategy for BOTH applies —
+    The two halves are unioned (the deletes as key-only rows, tagged)
+    and persisted once for the commit, under the table's batch size
+    gate, so the dedup upstream runs once; one aggregate over it tells
+    which halves are non-empty, and every later consumer (probe,
+    anti-join, union leg, era writes) reads the cached rows.
+
+    ``mode`` selects the write strategy —
     ``"copy-on-write"`` (read-optimized, the reference's default) or
     ``"merge-on-read"`` (O(batch) commits for hot high-frequency
     streams; schedule ``rewrite_position_delete_files`` to fold the
     accumulated eras, as the reference does via
-    ``position_delete_interval``)."""
-    stats = {"upserts": 0, "deletes": 0}
-    # distinct app ids per sub-operation: one replayed micro-batch must
-    # skip BOTH applies independently (the merge landing must not mask
-    # an unapplied delete, or vice versa)
-    up_app = f"{txn_app}:upsert" if txn_app else None
-    del_app = f"{txn_app}:delete" if txn_app else None
-    if not upserts.isEmpty():
-        table.merge(upserts, assert_unique_key=False, mode=mode,
-                    txn_app=up_app, txn_version=txn_version)
-        stats["upserts"] = 1
-    if not deletes.isEmpty():
-        table.delete_keys(deletes.select(SURROGATE_KEY_COL), mode=mode,
-                          txn_app=del_app, txn_version=txn_version)
-        stats["deletes"] = 1
-    return stats
+    ``position_delete_interval``).
+
+    ``txn_app``/``txn_version`` make the apply exactly-once: the commit
+    records ``txn.{txn_app}`` and a replay of a landed version is a
+    no-op. Tables written before fused commits carry one marker per
+    half (``{txn_app}:upsert`` / ``{txn_app}:delete``); a replay there
+    applies exactly the half whose marker did not land."""
+    landed: set[str] = set()
+    if txn_app is not None:
+        if table._txn_applied(txn_app, txn_version) is not None:
+            return {"upserts": 0, "deletes": 0}
+        landed = {
+            half for half in ("upsert", "delete")
+            if table._txn_applied(f"{txn_app}:{half}", txn_version) is not None
+        }
+    is_del = F.col(DELETE_FLAG_COL)
+    batch = upserts.withColumn(DELETE_FLAG_COL, F.lit(False)).unionByName(
+        deletes.select(SURROGATE_KEY_COL).withColumn(DELETE_FLAG_COL, F.lit(True)),
+        allowMissingColumns=True,
+    )
+    batch, cached = table._persist_batch(batch)
+    try:
+        n = batch.agg(
+            F.count_if(~is_del).alias("up"), F.count_if(is_del).alias("dels")
+        ).first()
+        do_up = n.up > 0 and "upsert" not in landed
+        do_del = n.dels > 0 and "delete" not in landed
+        keys = batch.where(is_del).select(SURROGATE_KEY_COL)
+        if do_up:
+            table.merge(batch.where(~is_del).drop(DELETE_FLAG_COL),
+                        assert_unique_key=False, mode=mode,
+                        deletes=keys if do_del else None,
+                        txn_app=txn_app, txn_version=txn_version)
+        elif do_del:
+            table.delete_keys(keys, mode=mode,
+                              txn_app=txn_app, txn_version=txn_version)
+    finally:
+        if cached is not None:
+            cached.unpersist()
+    return {"upserts": int(do_up), "deletes": int(do_del)}
 
 
 def batch_stats(df: DataFrame, ts_col: str = AUDIT_COL, offset_col: str = OFFSET_COL):

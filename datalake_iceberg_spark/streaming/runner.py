@@ -3,8 +3,8 @@
 Rebuilds the reference's CDC streaming topology
 (``src/utils/cdc_pipeline.py:347-439``, ``src/kafka_to_iceberg.py``):
 
-  source stream → foreachBatch( transform_and_dedup → MERGE/DELETE →
-  watermark append ) with per-source checkpoints, ``availableNow``
+  source stream → foreachBatch( transform_and_dedup → one MERGE+DELETE
+  commit → watermark append ) with per-source checkpoints, ``availableNow``
   drain-and-stop or ``processingTime`` continuous triggers, heartbeat
   watermark when no batch fired, stop-signal file polling, and
   multi-source thread parallelism with a concurrency semaphore.
@@ -20,7 +20,9 @@ an engine change.
 
 Exactly-once contract (reference ``src/README.md`` checkpoint section):
 one checkpoint dir per source, never shared; replayed batches converge
-because MERGE on ``id_iceberg`` is idempotent.
+because each batch is one commit stamped with its batch id, so a replay
+of a landed batch is a no-op (and MERGE on ``id_iceberg`` is idempotent
+besides).
 """
 
 from __future__ import annotations
@@ -187,7 +189,13 @@ class CdcStreamRunner:
         self, batch_df: DataFrame, batch_id: int, source: SourceConfig, target: LakeTable
     ) -> None:
         """The foreachBatch body (reference ``cdc_pipeline.py:254-339``):
-        persist → transform+dedup → apply → stats → watermark append."""
+        persist → transform+dedup → apply → stats → watermark append.
+
+        The apply is ONE table commit per micro-batch
+        (:func:`apply_cdc_changes` fuses the upserts and the deletes into
+        one ``merge(..., deletes=)``), carrying the ``txn.cdc:{source}``
+        marker at ``batch_id`` — a replayed batch is a no-op, and a
+        reader never sees a batch's upserts without its deletes."""
         from pyspark import StorageLevel
 
         t0 = time.time()

@@ -1236,22 +1236,12 @@ class LakeTable:
         self._commit_dir_birth[rel] = time.time()
         return rel
 
-    def _write_parallelism(self, df: DataFrame, n_buckets: int) -> int:
-        """Sub-splits per bucket, sized by DATA VOLUME: enough splits that
-        each write task carries ~``TARGET_WRITE_BYTES``, capped at
-        ``MAX_WRITE_SPLITS``. A small CDC merge stays one task per bucket
-        (sub-splitting it would only fragment files and widen the
-        shuffle); a full-table RTAS fans out to ``n_buckets × splits``
-        tasks. Falls back to core-count/buckets when Catalyst can't size
-        the plan.
-
-        The per-task byte target defaults to ``TARGET_WRITE_BYTES`` and
-        is overridable per table via ``write.target-file-size-bytes``
-        (Iceberg's property of the same name): a scan-heavy analytics
-        table wants fewer, larger files than a lookup-heavy CDC target,
-        and that choice belongs to the TABLE, not the writing code
-        path."""
-        target = TARGET_WRITE_BYTES
+    def _target_file_bytes(self) -> int:
+        """Per-task write byte target: ``TARGET_WRITE_BYTES``, or the
+        table's ``write.target-file-size-bytes`` (Iceberg's property of
+        the same name) when set. A scan-heavy analytics table wants
+        fewer, larger files than a lookup-heavy CDC target, and that
+        choice belongs to the TABLE, not the writing code path."""
         try:
             props = (
                 self._pending_props
@@ -1259,16 +1249,9 @@ class LakeTable:
                 else (self.snapshot().properties if self.exists() else {})
             )
             declared = int(props.get("write.target-file-size-bytes", 0))
-            if declared > 0:
-                target = declared
         except (ValueError, TypeError):
-            pass  # malformed property -> default sizing, never a failed write
-        size = plan_size_bytes(df)
-        if size is None:
-            cores = self.spark.sparkContext.defaultParallelism
-            return max(1, min(MAX_WRITE_SPLITS, -(-cores // max(1, n_buckets))))
-        per_bucket = size // max(1, n_buckets)
-        return max(1, min(MAX_WRITE_SPLITS, -(-per_bucket // target)))
+            declared = 0  # malformed property -> default sizing, never a failed write
+        return declared if declared > 0 else TARGET_WRITE_BYTES
 
     def _write_bucketed(
         self,
@@ -1293,13 +1276,19 @@ class LakeTable:
         bucket dir). Sub-splitting keys on the KEY hash (not random) keeps
         task retries deterministic; the distinct seed de-correlates it from
         the bucket id (same-hash mod would put a bucket's rows in one split).
+        The sub-split count is sized by DATA VOLUME: enough splits that each
+        write task carries ~:meth:`_target_file_bytes`, capped at
+        ``MAX_WRITE_SPLITS``. A small CDC merge stays one task per bucket
+        (sub-splitting it would only fragment files and widen the shuffle);
+        a full-table RTAS fans out to ``n_buckets × splits`` tasks. Falls
+        back to core-count/buckets when Catalyst can't size the plan.
 
         ``sort_by`` clusters rows on the given columns within each task's
         slice (``sortWithinPartitions``) so parquet row groups get tight,
         mostly-disjoint min/max ranges — the scan-side payoff is row-group
         pruning for pushed-down range predicates. ``drop_after_sort``
-        removes synthetic sort keys (e.g. a z-value) after ordering, before
-        the write — a projection after sort keeps row order.
+        removes synthetic columns (e.g. a z-value) before the write — a
+        projection after sort keeps row order.
 
         ``bucket_weights`` (r16 skew fix, bucket id -> manifest #bytes of
         that bucket's input) switches to WEIGHT-AWARE sub-splitting: a
@@ -1316,7 +1305,24 @@ class LakeTable:
         rel = self._new_commit_dir()
         abs_dir = self.fs.join(self.location, rel)
         writer_opts = self._writer_options()
-        if keys and n_buckets > 1 and bucket_weights and not sort_by:
+        if not (keys and n_buckets > 1):
+            if sort_by:
+                df = df.sortWithinPartitions(*sort_by)
+            if drop_after_sort:
+                df = df.drop(*drop_after_sort)
+            df.write.mode("overwrite").options(**writer_opts).parquet(abs_dir)
+            self._harvest_stats([rel])
+            return {"0": [rel]}
+        target = self._target_file_bytes()
+        try:
+            cores = self.spark.sparkContext.defaultParallelism
+        except Exception:  # Spark Connect: no SparkContext handle
+            cores = None
+        staged = df.withColumn("_bucket", bucket_expr(keys, n_buckets))
+        key_cols = [
+            F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in keys
+        ]
+        if bucket_weights and not sort_by:
             from itertools import accumulate as _acc
             from statistics import median as _median
 
@@ -1338,24 +1344,15 @@ class LakeTable:
             ]
             off_list = [0] + list(_acc(s_list[:-1]))
             total_combos = sum(s_list) or 1
-            try:
-                cores = self.spark.sparkContext.defaultParallelism
-            except Exception:  # Spark Connect: no SparkContext handle
-                cores = total_combos
             # task-count sizing matches the uniform path (cores, or the
-            # byte-need at TARGET_WRITE_BYTES per task, capped by the
+            # byte-need at the table's target per task, capped by the
             # combo count): the weighted path changes WHICH rows share a
             # task, not how many tasks the write launches — a 4x-cores
             # first cut measured 2x slower on the 1024-bucket fold from
             # pure task-launch overhead (128 near-empty tasks vs 32).
-            total_w = sum(bucket_weights.values())
-            need = max(cores, -(-total_w // TARGET_WRITE_BYTES))
+            need = max(cores or total_combos,
+                       -(-sum(bucket_weights.values()) // target))
             nparts = max(1, min(total_combos, need))
-            staged = df.withColumn("_bucket", bucket_expr(keys, n_buckets))
-            key_cols = [
-                F.coalesce(F.col(k).cast("string"), F.lit("\x00null"))
-                for k in keys
-            ]
             b_idx = F.col("_bucket").cast("int") + 1
             sb_col = F.greatest(
                 F.element_at(F.array(*[F.lit(s) for s in s_list]), b_idx),
@@ -1372,20 +1369,14 @@ class LakeTable:
                 .repartition(nparts, "_pt")
                 .drop("_pt")
             )
-            (
-                staged.write.partitionBy("_bucket")
-                .mode("overwrite")
-                .options(**writer_opts)
-                .parquet(abs_dir)
+        else:
+            size = plan_size_bytes(df)
+            splits = (
+                -(-(cores or n_buckets) // n_buckets)
+                if size is None
+                else -(-(size // n_buckets) // target)
             )
-            out: dict[str, list[str]] = {}
-            for entry in sorted(self.fs.listdir(abs_dir)):
-                if entry.startswith("_bucket="):
-                    out[entry.split("=", 1)[1]] = [f"{rel}/{entry}"]
-            self._harvest_stats(list(d for dirs in out.values() for d in dirs))
-            return out
-        if keys and n_buckets > 1:
-            splits = self._write_parallelism(df, n_buckets)
+            splits = max(1, min(MAX_WRITE_SPLITS, splits))
             # Shuffle-partition count is capped by what the data VOLUME
             # (or, unsized, the core count) actually needs: the
             # ``partitionBy("_bucket")`` writer lets one task emit many
@@ -1393,18 +1384,15 @@ class LakeTable:
             # (150 CDC keys into 1024 buckets) shuffles into ~cores
             # tasks, not n_buckets near-empty ones — same one-file-per-
             # bucket layout, ~30x fewer task launches and less GC churn.
-            # Full-volume writes still fan out to n_buckets × splits.
-            want = n_buckets * max(1, splits)
-            size = plan_size_bytes(df)
-            try:
-                cores = self.spark.sparkContext.defaultParallelism
-            except Exception:  # Spark Connect: no SparkContext handle
-                cores = want
-            need = cores if size is None else max(
-                cores, -(-size // TARGET_WRITE_BYTES)
+            # Full-volume writes still fan out to n_buckets × splits, at
+            # the table's byte target per task: a core-count cap alone
+            # would merge a small-file table's splits back into ~cores
+            # files on a small host.
+            want = n_buckets * splits
+            need = (cores or want) if size is None else max(
+                cores or want, -(-size // target)
             )
             nparts = max(1, min(want, need))
-            staged = df.withColumn("_bucket", bucket_expr(keys, n_buckets))
             if (splits > 1 or nparts < want) and sort_by:
                 # clustered write: RANGE-split on (_bucket, sort keys) so
                 # each task holds a contiguous slice — files stay sorted
@@ -1414,55 +1402,40 @@ class LakeTable:
                 staged = staged.repartitionByRange(
                     nparts, "_bucket", *sort_by
                 )
-            elif splits > 1:
-                key_cols = [
-                    F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in keys
-                ]
-                split_col = F.pmod(
-                    F.xxhash64(F.lit("_split_seed"), *key_cols), F.lit(splits)
-                ).cast("int")
-                # EXACT task placement: hashing the (bucket, split)
-                # tuple into ~as many partitions is balls-into-bins
-                # (r14 sf1 capture: 3.7x task skew on the merge write,
-                # some tasks empty, others carrying 2-3 combos). Route
-                # combo -> partition combo % nparts via the pre-imaged
-                # hash tokens instead: every task gets the same number
-                # of combos (±1), and residual skew reflects only true
-                # per-bucket row imbalance.
-                combo = (
-                    F.col("_bucket").cast("int") * F.lit(splits) + split_col
-                )
+            else:
+                combo = F.col("_bucket").cast("int")
+                if splits > 1:
+                    # EXACT task placement: hashing the (bucket, split)
+                    # tuple into ~as many partitions is balls-into-bins
+                    # (r14 sf1 capture: 3.7x task skew on the merge
+                    # write, some tasks empty, others carrying 2-3
+                    # combos). Route combo -> partition combo % nparts
+                    # via the pre-imaged hash tokens instead: every task
+                    # gets the same number of combos (±1), and residual
+                    # skew reflects only true per-bucket row imbalance.
+                    combo = combo * F.lit(splits) + F.pmod(
+                        F.xxhash64(F.lit("_split_seed"), *key_cols),
+                        F.lit(splits),
+                    ).cast("int")
                 staged = staged.withColumn(
                     "_pt", _exact_partition_col(combo, nparts)
                 ).repartition(nparts, "_pt").drop("_pt")
-            else:
-                staged = staged.withColumn(
-                    "_pt",
-                    _exact_partition_col(F.col("_bucket").cast("int"), nparts),
-                ).repartition(nparts, "_pt").drop("_pt")
             if sort_by:
                 staged = staged.sortWithinPartitions("_bucket", *sort_by)
-            if drop_after_sort:
-                staged = staged.drop(*drop_after_sort)
-            (
-                staged.write.partitionBy("_bucket")
-                .mode("overwrite")
-                .options(**writer_opts)
-                .parquet(abs_dir)
-            )
-            out: dict[str, list[str]] = {}
-            for entry in sorted(self.fs.listdir(abs_dir)):
-                if entry.startswith("_bucket="):
-                    out[entry.split("=", 1)[1]] = [f"{rel}/{entry}"]
-            self._harvest_stats(list(d for dirs in out.values() for d in dirs))
-            return out
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by)
         if drop_after_sort:
-            df = df.drop(*drop_after_sort)
-        df.write.mode("overwrite").options(**writer_opts).parquet(abs_dir)
-        self._harvest_stats([rel])
-        return {"0": [rel]}
+            staged = staged.drop(*drop_after_sort)
+        (
+            staged.write.partitionBy("_bucket")
+            .mode("overwrite")
+            .options(**writer_opts)
+            .parquet(abs_dir)
+        )
+        out: dict[str, list[str]] = {}
+        for entry in sorted(self.fs.listdir(abs_dir)):
+            if entry.startswith("_bucket="):
+                out[entry.split("=", 1)[1]] = [f"{rel}/{entry}"]
+        self._harvest_stats(list(d for dirs in out.values() for d in dirs))
+        return out
 
     def _writer_options(self) -> dict[str, str]:
         """Parquet writer options derived from table properties (the
@@ -1680,7 +1653,7 @@ class LakeTable:
         n_buckets as the data, so a key in bucket X's delete file cannot
         match a row outside bucket X; and within one commit every delete
         dir of a bucket carries identical ``covers`` (see
-        ``_delete_keys_mor``), so the commit-level signature is exact.
+        ``_commit_mor``), so the commit-level signature is exact.
         Dirs no delete covers take the plain fast path."""
         plain: list[str] = []
         groups: dict[frozenset, tuple[list[str], set[str]]] = {}
@@ -3305,6 +3278,7 @@ class LakeTable:
         txn_app: str | None = None,
         txn_version: int | None = None,
         update_columns: list[str] | None = None,
+        deletes: DataFrame | None = None,
     ) -> Snapshot:
         """Keyed upsert: WHEN MATCHED UPDATE SET all / WHEN NOT MATCHED INSERT all.
 
@@ -3317,15 +3291,28 @@ class LakeTable:
         read & rewritten (manifest-level partition pruning), and within
         them only the dirs whose key range can intersect the batch.
 
+        ``deletes`` (a frame carrying the key columns) removes those keys
+        IN THE SAME COMMIT — the CDC micro-batch shape, one rewrite and
+        one snapshot instead of a merge followed by a delete, so no
+        reader ever sees the upserts without the deletes (Delta Lake's
+        one-transaction-one-log-entry design). The copy-on-write rewrite
+        becomes ``target ⟕anti (source keys ∪ delete keys) ∪ source``
+        over the buckets either half touches. The deletes apply to the
+        table as it stood BEFORE this commit, so a key present in both
+        halves ends up upserted; ``cdc.pipeline.dedup_latest`` leaves one
+        event per key, so a CDC batch's halves never overlap.
+
         ``mode="merge-on-read"`` (Iceberg's ``write.merge.mode``
         choice): the batch appends as new data dirs and its key set
         doubles as an equality-delete era covering only the PRE-commit
         dirs — matched target rows are masked at read, every source row
         lands, and commit cost is O(batch) regardless of how big the
-        touched buckets are. Reads pay one anti-join per merge/delete
-        era until ``rewrite_position_delete_files`` folds them in; the
-        hot-ingest pattern is MoR merges + a scheduled fold, exactly
-        like MoR deletes.
+        touched buckets are. ``deletes`` become key-only eras over the
+        same pre-commit dirs, in the same snapshot. Reads pay one
+        anti-join per merge/delete era until
+        ``rewrite_position_delete_files`` folds them in; the hot-ingest
+        pattern is MoR merges + a scheduled fold, exactly like MoR
+        deletes.
 
         ``update_columns=[...]`` gives the Iceberg/Delta partial-update
         clause — ``WHEN MATCHED THEN UPDATE SET only these columns
@@ -3353,35 +3340,51 @@ class LakeTable:
             )
             return self.merge(
                 eff, assert_unique_key=assert_unique_key, mode=mode,
-                txn_app=txn_app, txn_version=txn_version,
+                txn_app=txn_app, txn_version=txn_version, deletes=deletes,
             )
-        if mode == "merge-on-read":
-            return self._merge_mor(source, assert_unique_key,
-                                   txn_app=txn_app, txn_version=txn_version)
-        if mode != "copy-on-write":
+        if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown merge mode {mode!r}")
         snap = self.snapshot()
         if not snap.key:
             raise ValueError("merge requires a keyed table")
-        from pyspark import StorageLevel
-
-        # The source feeds THREE consumers in one commit: the
-        # duplicate-key/bounds probe (or the affected-buckets probe),
-        # the anti-join build side, and the union leg of the rewrite.
-        # Persist it batch-sized for the commit's duration (the same
-        # policy the partial-update branch above and the CDC pipeline
-        # already apply) so the caller's upstream pipeline runs once,
-        # and the union leg reads cached blocks instead of re-scanning
-        # — the re-scan previously ran as a second, much lighter task
-        # population inside the write's map stage, reading as 3.7x
-        # max/median "skew" in the r14 sf1 capture. Size-gated (see
-        # _persist_batch): above the cap, re-running the source beats
-        # serializing a table-sized batch into the executor cache and
-        # spilling it.
-        source, cached = self._persist_batch(self._align(source))
+        cow = mode == "copy-on-write"
+        # A CoW source feeds THREE consumers in one commit: the probe
+        # (duplicate keys, affected buckets, key bounds), the anti-join
+        # build side, and the union leg of the rewrite; a MoR source
+        # feeds the duplicate probe and the write. Persist it
+        # batch-sized for the commit's duration so the caller's upstream
+        # pipeline runs once, and the union leg reads cached blocks
+        # instead of re-scanning — the re-scan previously ran as a
+        # second, much lighter task population inside the write's map
+        # stage, reading as 3.7x max/median "skew" in the r14 sf1
+        # capture. Size-gated (see _persist_batch): above the cap,
+        # re-running the source beats serializing a table-sized batch
+        # into the executor cache and spilling it.
+        source = self._align(source)
+        cached = None
+        if cow or assert_unique_key:
+            source, cached = self._persist_batch(source)
         try:
-            return self._merge_cow(
-                source, snap, assert_unique_key,
+            self._enforce_constraints(source, "merge")
+            if cow:
+                return self._rewrite_cow(
+                    snap, source, deletes, assert_unique_key, "merge",
+                    txn_app=txn_app, txn_version=txn_version,
+                )
+            if assert_unique_key:
+                dup = (
+                    source.groupBy(*snap.key)
+                    .count()
+                    .filter(F.col("count") > 1)
+                    .limit(1)
+                    .count()
+                )
+                if dup:
+                    raise ValueError(
+                        "MERGE source has duplicate keys; dedup-latest before merging"
+                    )
+            return self._commit_mor(
+                snap, source, deletes, "merge-mor",
                 txn_app=txn_app, txn_version=txn_version,
             )
         finally:
@@ -3408,51 +3411,64 @@ class LakeTable:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         return df, df
 
-    def _merge_cow(
+    def _rewrite_cow(
         self,
-        source: DataFrame,
         snap: Snapshot,
+        source: DataFrame | None,
+        deletes: DataFrame | None,
         assert_unique_key: bool,
+        operation: str,
         txn_app: str | None = None,
         txn_version: int | None = None,
     ) -> Snapshot:
-        self._enforce_constraints(source, "merge")
-        bounds = None
-        if assert_unique_key:
-            # one probe job serves the duplicate-key guard, bucket
-            # pruning, AND dir pruning: per-key counts roll up to a
-            # per-bucket max + the bucket's LEADING-key-column bounds
-            # (≤ n_buckets rows collected). For a composite key the
-            # leading column alone still prunes soundly — a matched row
-            # must equal the batch on EVERY key column, so a dir whose
-            # leading-column range misses the batch's cannot match
-            # (the reference's TB_COMPOSITE_KEY tables get era pruning
-            # this way when the leading column is the time-ordered one).
-            bucket = (
-                bucket_expr(snap.key, snap.n_buckets).alias("b")
-                if snap.n_buckets > 1
-                else F.lit(0).alias("b")
+        """The copy-on-write DML core shared by ``merge`` and
+        ``delete_keys``: rewrite the buckets the batch touches as
+        ``target ⟕anti (source keys ∪ delete keys) ∪ source`` in one
+        write and one ``_replace_buckets`` commit (either half may be
+        None)."""
+        key = snap.key
+        halves = [
+            half.select(*key, F.lit(up).alias("_up"))
+            for half, up in ((source, 1), (deletes, 0))
+            if half is not None
+        ]
+        batch_keys = (
+            halves[0] if len(halves) == 1 else halves[0].unionByName(halves[1])
+        )
+        # one probe job serves the duplicate-key guard, bucket pruning,
+        # dir pruning AND the union-leg sizing: per-key upsert counts
+        # roll up to a per-bucket max + row total + the bucket's
+        # LEADING-key-column bounds (≤ n_buckets rows collected). For a
+        # composite key the leading column alone still prunes soundly —
+        # a matched row must equal the batch on EVERY key column, so a
+        # dir whose leading-column range misses the batch's cannot match
+        # (the reference's TB_COMPOSITE_KEY tables get era pruning this
+        # way when the leading column is the time-ordered one).
+        per_key = batch_keys
+        if assert_unique_key and source is not None:
+            per_key = batch_keys.groupBy(*key).agg(F.sum("_up").alias("_up"))
+        bucket = (
+            bucket_expr(key, snap.n_buckets).alias("b")
+            if snap.n_buckets > 1
+            else F.lit(0).alias("b")
+        )
+        probe = (
+            per_key.select(bucket, "_up", F.col(key[0]).alias("k"))
+            .groupBy("b")
+            .agg(
+                F.max("_up").alias("max_dup"),
+                F.sum("_up").alias("n_up"),
+                F.min("k").alias("kmin"),
+                F.max("k").alias("kmax"),
             )
-            probe = (
-                source.groupBy(*snap.key)
-                .count()
-                .select(bucket, "count", F.col(snap.key[0]).alias("k"))
-                .groupBy("b")
-                .agg(
-                    F.max("count").alias("max_dup"),
-                    F.min("k").alias("kmin"),
-                    F.max("k").alias("kmax"),
-                )
-                .collect()
+            .collect()
+        )
+        if any(r.max_dup > 1 for r in probe):
+            raise ValueError(
+                "MERGE source has duplicate keys; dedup-latest before merging"
             )
-            if any(r.max_dup > 1 for r in probe):
-                raise ValueError(
-                    "MERGE source has duplicate keys; dedup-latest before merging"
-                )
-            affected = sorted(r.b for r in probe)
-            bounds = {r.b: (r.kmin, r.kmax) for r in probe}
-        else:
-            affected = self._affected_buckets(source, snap)
+        affected = sorted(r.b for r in probe)
+        bounds = {r.b: (r.kmin, r.kmax) for r in probe}
         touched, kept = self._split_dirs_by_key_bounds(snap, affected, bounds)
         if any(snap.deletes.get(b) for b in touched):
             target = self._read_with_deletes(snap, touched)
@@ -3460,27 +3476,24 @@ class LakeTable:
             target = self._read_dirs(
                 [d for ds in touched.values() for d in ds], snap
             )
-        # Right-size the union leg to the batch's actual volume: for a
-        # persisted source the count is one cache-backed job (the probe
-        # already materialized it) and coalesce merges cached blocks
-        # without a shuffle; an unpersisted (size-gated) source pays
-        # one extra evaluation — tolerable exactly because the gate
-        # only skips table-scale batches, where caching costs more. A
-        # CDC-sized batch otherwise fans its union leg out to
-        # scan-parallelism task counts — dozens of near-empty task
-        # launches that also bimodalize the write's map stage (half
-        # heavy rewrite tasks, half trivial batch tasks — the residual
-        # "skew" reading of the r14 sf1 merge capture).
-        n_src = source.count()
-        try:
-            cores = self.spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect: no SparkContext handle
-            cores = 32
-        k = max(1, min(cores, -(-n_src // UNION_LEG_ROWS_PER_TASK)))
-        merged = target.join(source, on=snap.key, how="left_anti").unionByName(
-            source.coalesce(k)
-        )
-        new_dirs = self._write_bucketed(merged, snap.key, snap.n_buckets)
+        merged = target.join(batch_keys.select(*key), on=key, how="left_anti")
+        if source is not None:
+            # Right-size the union leg to the batch's actual volume
+            # (the probe counted it): coalesce merges the persisted
+            # source's cached blocks without a shuffle. A CDC-sized
+            # batch otherwise fans its union leg out to
+            # scan-parallelism task counts — dozens of near-empty task
+            # launches that also bimodalize the write's map stage (half
+            # heavy rewrite tasks, half trivial batch tasks — the
+            # residual "skew" reading of the r14 sf1 merge capture).
+            n_src = sum(r.n_up for r in probe)
+            try:
+                cores = self.spark.sparkContext.defaultParallelism
+            except Exception:  # Spark Connect: no SparkContext handle
+                cores = 32
+            k = max(1, min(cores, -(-n_src // UNION_LEG_ROWS_PER_TASK)))
+            merged = merged.unionByName(source.coalesce(k))
+        new_dirs = self._write_bucketed(merged, key, snap.n_buckets)
         per_bucket = {
             str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
         }
@@ -3488,7 +3501,7 @@ class LakeTable:
             snap,
             per_bucket,
             affected,
-            "merge",
+            operation,
             {
                 "affected_buckets": affected,
                 "pruned_dirs": sum(len(v) for v in kept.values()),
@@ -3564,173 +3577,83 @@ class LakeTable:
         deletes as anti-joins until ``rewrite_position_delete_files``
         folds them in (Iceberg's ``write.delete.mode`` choice; the
         reference schedules the fold via ``position_delete_interval``,
-        ``src/utils/cdc_pipeline.py:421-425``)."""
+        ``src/utils/cdc_pipeline.py:421-425``). A batch that also
+        upserts passes its keys as ``merge(..., deletes=)`` instead, so
+        both halves land in one commit."""
         done = self._txn_applied(txn_app, txn_version)
         if done is not None:
             return done
-        if mode == "merge-on-read":
-            return self._delete_keys_mor(keys_df, txn_app=txn_app,
-                                         txn_version=txn_version)
-        if mode != "copy-on-write":
+        if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown delete mode {mode!r}")
         snap = self.snapshot()
         if not snap.key:
             raise ValueError("delete_keys requires a keyed table")
-        keys_df = keys_df.select(*snap.key).distinct()
-        # one probe job: affected buckets + per-bucket LEADING-key
-        # bounds for dir-level pruning (see _split_dirs_by_key_bounds;
-        # sound for composite keys — equality on every key column
-        # implies leading-column range intersection)
-        bucket = (
-            bucket_expr(snap.key, snap.n_buckets).alias("b")
-            if snap.n_buckets > 1
-            else F.lit(0).alias("b")
-        )
-        probe = (
-            keys_df.select(bucket, F.col(snap.key[0]).alias("k"))
-            .groupBy("b")
-            .agg(F.min("k").alias("kmin"), F.max("k").alias("kmax"))
-            .collect()
-        )
-        affected = sorted(r.b for r in probe)
-        bounds = {r.b: (r.kmin, r.kmax) for r in probe}
-        touched, kept = self._split_dirs_by_key_bounds(snap, affected, bounds)
-        if any(snap.deletes.get(b) for b in touched):
-            target = self._read_with_deletes(snap, touched)
-        else:
-            target = self._read_dirs(
-                [d for ds in touched.values() for d in ds], snap
-            )
-        remaining = target.join(keys_df, on=snap.key, how="left_anti")
-        new_dirs = self._write_bucketed(remaining, snap.key, snap.n_buckets)
-        per_bucket = {
-            str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
-        }
-        return self._replace_buckets(
-            snap,
-            per_bucket,
-            affected,
-            "delete",
-            {
-                "affected_buckets": affected,
-                "pruned_dirs": sum(len(v) for v in kept.values()),
-                "rewritten_dirs": sum(len(v) for v in touched.values()),
-            },
-            txn_app=txn_app,
-            txn_version=txn_version,
-        )
+        if mode == "merge-on-read":
+            return self._commit_mor(snap, None, keys_df, "delete-mor",
+                                    txn_app=txn_app, txn_version=txn_version)
+        return self._rewrite_cow(snap, None, keys_df, False, "delete",
+                                 txn_app=txn_app, txn_version=txn_version)
 
-    def _merge_mor(self, source: DataFrame, assert_unique_key: bool = True,
-                   txn_app: str | None = None,
-                   txn_version: int | None = None) -> Snapshot:
-        """Merge-on-read MERGE: write the batch once as new data dirs;
-        the same dirs serve as the equality-delete key source (the
-        delete reader projects just the key columns), with ``covers``
-        limited to the dirs live at commit time so the batch's own rows
-        are never masked. Concurrent commits rebase like
-        ``_delete_keys_mor``: a dir appended between snapshot and commit
-        is covered too (newest-key-wins, same stance as MoR delete)."""
-        snap = self.snapshot()
-        if not snap.key:
-            raise ValueError("merge requires a keyed table")
-        # same policy (and size gate) as the CoW path: when the dup
-        # probe will consume the source before the write does, persist
-        # batch-sized for the commit's duration so the caller's
-        # upstream pipeline runs once
-        source = self._align(source)
-        cached = None
-        if assert_unique_key:
-            source, cached = self._persist_batch(source)
-        try:
-            self._enforce_constraints(source, "merge")
-            if assert_unique_key:
-                dup = (
-                    source.groupBy(*snap.key)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .count()
-                )
-                if dup:
-                    raise ValueError(
-                        "MERGE source has duplicate keys; dedup-latest before merging"
-                    )
-            new_dirs = self._write_bucketed(source, snap.key, snap.n_buckets)
-        finally:
-            if cached is not None:
-                cached.unpersist()
+    def _commit_mor(
+        self,
+        snap: Snapshot,
+        source: DataFrame | None,
+        deletes: DataFrame | None,
+        operation: str,
+        txn_app: str | None = None,
+        txn_version: int | None = None,
+    ) -> Snapshot:
+        """The merge-on-read DML core shared by ``merge`` and
+        ``delete_keys``: upsert rows are written once as new data dirs,
+        and the same dirs serve as the equality-delete key source (the
+        delete reader projects just the key columns); delete keys are
+        written as key-only delete dirs. Both land in ONE snapshot, and
+        every era ``covers`` exactly the data dirs live at commit time,
+        so the batch's own rows are never masked. Concurrent commits
+        rebase: a dir appended between snapshot and commit is covered
+        too (newest-key-wins). A delete dir in a bucket with no data
+        covers nothing and is left out of the manifest."""
+        data_dirs = (
+            self._write_bucketed(source, snap.key, snap.n_buckets)
+            if source is not None else {}
+        )
+        key_dirs = (
+            # no distinct: the era reader de-duplicates delete keys
+            self._write_bucketed(deletes.select(*snap.key), snap.key, snap.n_buckets)
+            if deletes is not None else {}
+        )
 
         def build(parent):
-            deletes = {b: list(entries) for b, entries in parent.deletes.items()}
+            eras = {b: list(entries) for b, entries in parent.deletes.items()}
             buckets = {b: list(d) for b, d in parent.buckets.items()}
             touched = []
-            for b, dirs in new_dirs.items():
-                covers = list(parent.buckets.get(b, []))
-                for d in dirs:
-                    if covers:
-                        deletes.setdefault(b, []).append(
-                            {"dir": d, "covers": covers}
-                        )
-                buckets.setdefault(b, [])
-                buckets[b] = buckets[b] + dirs
-                touched.append(int(b))
+            for b in sorted(set(key_dirs) | set(data_dirs), key=int):
+                covers = parent.buckets.get(b, [])
+                if covers:
+                    eras.setdefault(b, []).extend(
+                        {"dir": d, "covers": list(covers)}
+                        for d in key_dirs.get(b, []) + data_dirs.get(b, [])
+                    )
+                if b in data_dirs:
+                    buckets[b] = buckets.get(b, []) + data_dirs[b]
+                if covers or b in data_dirs:
+                    touched.append(int(b))
             return Snapshot(
                 version=parent.version + 1,
                 parent=parent.version,
                 timestamp=_utcnow(),
-                operation="merge-mor",
+                operation=operation,
                 schema_json=parent.schema_json,
                 key=parent.key,
                 n_buckets=parent.n_buckets,
                 buckets=buckets,
                 properties=parent.properties,
-                summary={
-                    "affected_buckets": sorted(touched),
-                    "mode": "merge-on-read",
-                },
-                deletes=deletes,
+                summary={"affected_buckets": touched, "mode": "merge-on-read"},
+                deletes=eras,
                 renames=parent.renames,
             )
 
-        return self._commit(build, "merge-mor", txn_app=txn_app, txn_version=txn_version)
-
-    def _delete_keys_mor(self, keys_df: DataFrame,
-                         txn_app: str | None = None,
-                         txn_version: int | None = None) -> Snapshot:
-        """Merge-on-read DELETE: bucket-partitioned equality-delete files,
-        each covering exactly the data dirs live at commit time."""
-        snap = self.snapshot()
-        if not snap.key:
-            raise ValueError("delete_keys requires a keyed table")
-        keys_df = keys_df.select(*snap.key).distinct()
-        new_dirs = self._write_bucketed(keys_df, snap.key, snap.n_buckets)
-
-        def build(parent):
-            deletes = {b: list(entries) for b, entries in parent.deletes.items()}
-            touched = []
-            for b, dirs in new_dirs.items():
-                covers = parent.buckets.get(b, [])
-                if not covers:
-                    continue  # no data to delete in this bucket
-                for d in dirs:
-                    deletes.setdefault(b, []).append({"dir": d, "covers": list(covers)})
-                touched.append(int(b))
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="delete-mor",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets={b: list(d) for b, d in parent.buckets.items()},
-                properties=parent.properties,
-                summary={"affected_buckets": sorted(touched), "mode": "merge-on-read"},
-                deletes=deletes,
-                renames=parent.renames,
-            )
-
-        return self._commit(build, "delete-mor", txn_app=txn_app, txn_version=txn_version)
+        return self._commit(build, operation, txn_app=txn_app, txn_version=txn_version)
 
     def delete_where(self, condition, mode: str = "copy-on-write") -> Snapshot:
         """Predicate delete (the reference's retention purge shape,
@@ -3933,7 +3856,7 @@ class LakeTable:
         ``mode="merge-on-read"`` (keyed tables; Iceberg's
         ``write.update.mode`` choice): only the MATCHED rows are
         written, as new data dirs that double as the equality-delete
-        key source masking their old versions (the ``_merge_mor``
+        key source masking their old versions (the ``_commit_mor``
         layout) with ``covers`` = exactly the touched dirs — commit
         cost is the pruned scan + O(matched rows), never a rewrite; a
         backfill touching 0.1% of a 100 TB table moves 0.1% of the
@@ -4021,7 +3944,7 @@ class LakeTable:
         """Merge-on-read predicate UPDATE: one pruned scan selects the
         matched rows, the assignments apply to THOSE rows only, and
         they commit as new data dirs that double as the equality-delete
-        key source (the ``_merge_mor`` layout) with ``covers`` =
+        key source (the ``_commit_mor`` layout) with ``covers`` =
         exactly the touched dirs. See ``update_where`` for semantics."""
         if not snap.key:
             raise ValueError("merge-on-read update_where requires a keyed table")

@@ -137,14 +137,23 @@ def test_conflicting_declared_orders_rejected(spark, catalog):
         t.rewrite_data_files()
 
 
-def test_target_file_size_property_fans_out_writes(spark, catalog, tmp_path):
-    import glob as _g
-    # parquet-backed input: Catalyst can SIZE the plan, so the per-task
-    # byte target actually drives the split count (in-memory relations
-    # fall back to core-count sizing where the property is moot)
-    rows = [Row(id=i, v="x" * 2000) for i in range(3000)]
+def _sized_input(spark, tmp_path):
+    """3000 rows of ~2 KB incompressible text, parquet-backed so Catalyst
+    can SIZE the plan (in-memory relations fall back to core-count
+    sizing, where the property is moot). Random payloads keep the
+    estimate near 6 MB whatever the host's core count: a constant
+    payload compresses to a dictionary per input file, so its size
+    would track the number of files the session happened to write."""
+    import random
+
+    rows = [Row(id=i, v=random.Random(i).randbytes(1000).hex()) for i in range(3000)]
     spark.createDataFrame(rows).write.parquet(str(tmp_path / "in"))
-    df = spark.read.parquet(str(tmp_path / "in"))
+    return spark.read.parquet(str(tmp_path / "in"))
+
+
+def _files_with_and_without_target(catalog, df):
+    import glob as _g
+
     t = catalog.create_or_replace(
         "db.small_files", df, key=["id"], n_buckets=2,
         properties={"write.target-file-size-bytes": "65536"},
@@ -152,8 +161,43 @@ def test_target_file_size_property_fans_out_writes(spark, catalog, tmp_path):
     many = len(_g.glob(f"{t.location}/data/*/**/*.parquet", recursive=True))
     t2 = catalog.create_or_replace("db.big_files", df, key=["id"], n_buckets=2)
     few = len(_g.glob(f"{t2.location}/data/*/**/*.parquet", recursive=True))
-    assert many > few >= 2
     assert t.read().count() == t2.read().count() == 3000
+    return many, few
+
+
+def test_target_file_size_property_fans_out_writes(spark, catalog, tmp_path):
+    many, few = _files_with_and_without_target(catalog, _sized_input(spark, tmp_path))
+    assert many > few >= 2
+
+
+def test_target_file_size_property_fans_out_on_one_core(spark, catalog, tmp_path, monkeypatch):
+    """The write's task count follows the table's byte target, not just
+    the core count: at defaultParallelism 1 a core-capped write merges
+    every sub-split of a bucket back into one file."""
+    df = _sized_input(spark, tmp_path)
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda self: 1)
+    )
+    many, few = _files_with_and_without_target(catalog, df)
+    assert few == 2
+    assert many > 2 * few
+
+
+def test_weighted_write_applies_drop_after_sort(spark, catalog):
+    """The weight-aware write path (no sort_by) still drops the
+    caller's synthetic columns before writing."""
+    import glob as _g
+
+    t = _mk(catalog, spark, "db.weighted_drop")
+    df = t.read().selectExpr("*", "id * 2 AS _synthetic")
+    out = t._write_bucketed(
+        df, ["id"], 4, drop_after_sort=["_synthetic"],
+        bucket_weights={0: 100, 1: 100, 2: 400, 3: 100},
+    )
+    files = [f for d in out.values() for f in _g.glob(f"{t.location}/{d[0]}/*.parquet")]
+    assert files
+    for f in files:
+        assert "_synthetic" not in pq.read_schema(f).names
 
 
 # ------------------------------------------------------ CHECK constraints
