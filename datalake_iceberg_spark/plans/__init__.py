@@ -45,10 +45,6 @@ def pushed_filters(text: str) -> list[str]:
     return out
 
 
-def read_schemas(text: str) -> list[str]:
-    return [m.group(1) for m in re.finditer(r"ReadSchema: (\S+)", text)]
-
-
 _PYTHON_OPS = (
     "BatchEvalPython",      # row-at-a-time Python UDF
     "ArrowEvalPython",      # pandas UDF

@@ -32,11 +32,16 @@ def _fingerprint(path: str):
     """(mtime_ns, size) of the fixture file/dir — the memo invalidation
     key (ADVICE r15): a fixture regenerated in-process at the same path
     must re-sniff its schema instead of silently reading with the stale
-    one. Directories fingerprint the dir mtime (any file add/replace
-    bumps it on POSIX renames into the dir)."""
+    one. A directory also folds in each child file's name and size, so
+    a rewrite within one mtime tick (coarse-timestamp filesystems) is
+    still seen: Spark names every part file afresh."""
     try:
         st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
+        fp = (st.st_mtime_ns, st.st_size)
+        if os.path.isdir(path):
+            with os.scandir(path) as it:
+                fp += tuple(sorted((e.name, e.stat().st_size) for e in it))
+        return fp
     except OSError:
         return None
 
@@ -69,11 +74,14 @@ def load_balanced(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     try:
         target = spark.sparkContext.defaultParallelism
         path = f"{sf_dir}/{name}.parquet"
-        key = (path, target, _fingerprint(path))
-        current = _SCAN_PARTS_CACHE.get(key)
-        if current is None:
-            current = df.rdd.getNumPartitions()
-            _SCAN_PARTS_CACHE[key] = current
+        # one entry per (path, parallelism): the fingerprint lives in
+        # the value, so a regenerated fixture replaces its entry
+        fp = _fingerprint(path)
+        hit = _SCAN_PARTS_CACHE.get((path, target))
+        if hit is None or hit[0] != fp:
+            hit = (fp, df.rdd.getNumPartitions())
+            _SCAN_PARTS_CACHE[(path, target)] = hit
+        current = hit[1]
     except Exception:  # Spark Connect: no RDD probe; leave the scan as-is
         return df
     if current < max(2, target // 2):

@@ -52,13 +52,6 @@ def register_decoder(modality: str, fn: Callable[[bytes], dict[str, Any]]) -> No
     _DECODERS[modality] = fn
 
 
-def _fake_decode(payload: bytes) -> dict[str, Any]:
-    """Deterministic stand-in for a codec: derives pseudo pixel stats
-    from the payload digest. NOT a real decoder — see module docstring."""
-    d = hashlib.md5(payload or b"").digest()
-    return {"mean_intensity": d[0] / 255.0, "n_bytes": len(payload or b"")}
-
-
 def decode_assets(df: DataFrame, feature_dim: int = 8) -> DataFrame:
     """payload → features via mapInPandas (Arrow batches).
 

@@ -128,12 +128,6 @@ def _plane_dot(emb_col, plane_idx: int, dim: int = 64):
     )
 
 
-def _hyperplane(plane_idx: int, dim: int = 64):
-    """Hyperplane as a literal array column (for callers that want the
-    vector itself)."""
-    return F.array(*[F.lit(float(s)) for s in _hyperplane_signs(plane_idx, dim)])
-
-
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket id per vector: N_PLANES sign bits
     packed into an int. Vectors in the same bucket are ANN candidates.

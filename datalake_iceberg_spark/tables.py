@@ -611,7 +611,7 @@ class _AlreadyApplied(Exception):
         self.snap = snap
 
 
-def _txn_wrap(build_snapshot, txn_app: str | None, txn_version: int | None):
+def _txn_wrap(build, txn_app: str | None, txn_version: int | None):
     """Wrap a commit builder with exactly-once write semantics (the
     Delta ``txnAppId``/``txnVersion`` and Iceberg WAP-id idea): when the
     parent snapshot already records ``txn.{app} >= version``, the write
@@ -621,7 +621,7 @@ def _txn_wrap(build_snapshot, txn_app: str | None, txn_version: int | None):
     replays of the same micro-batch cannot both land: the loser rebases,
     sees the winner's marker, and skips."""
     if txn_app is None:
-        return build_snapshot
+        return build
     if txn_version is None:
         raise ValueError("txn_app requires txn_version")
     prop = f"txn.{txn_app}"
@@ -629,9 +629,9 @@ def _txn_wrap(build_snapshot, txn_app: str | None, txn_version: int | None):
     def wrapped(parent):
         if parent is not None and txn_version <= int(parent.properties.get(prop, -1)):
             raise _AlreadyApplied(parent)
-        snap = build_snapshot(parent)
-        snap.properties = {**snap.properties, prop: str(txn_version)}
-        return snap
+        changes = build(parent)
+        props = changes.get("properties", parent.properties if parent else {})
+        return {**changes, "properties": {**props, prop: str(txn_version)}}
 
     return wrapped
 
@@ -657,6 +657,100 @@ def _prune_deletes(
         if kept:
             out[b] = kept
     return out
+
+
+def _extend(lists: dict[str, list], more: dict[str, list]) -> dict[str, list]:
+    """``lists`` (bucket -> dirs or era entries) with ``more``'s items
+    appended per bucket, built fresh — neither input is mutated."""
+    return {b: lists.get(b, []) + more.get(b, []) for b in {**lists, **more}}
+
+
+#: what a commit inherits from its parent unless it changes it
+_CARRIED = ("schema_json", "key", "n_buckets", "buckets", "properties",
+            "deletes", "renames")
+
+
+def _content_of(snap: Snapshot) -> dict:
+    """Another snapshot's table content, as :func:`evolve` changes —
+    what rollback, fork and fast-forward adopt."""
+    return {f: getattr(snap, f) for f in _CARRIED}
+
+
+def evolve(parent: Snapshot | None, operation: str, changes: dict,
+           stats: dict | None = None) -> Snapshot:
+    """The one place a commit's snapshot is born (the Delta Lake log
+    idea: a commit is its parent plus a few changed fields). Builders
+    return only what they change — any of ``_CARRIED`` plus ``summary``
+    and ``ndv`` — and the rest follows from ``parent``:
+
+    - ``version``/``parent``/``timestamp`` number the commit; no parent
+      makes a version-0 root.
+    - Each ``_CARRIED`` field absent from ``changes`` is the parent's.
+    - ``stats``: the parent's per-dir column stats overlaid with
+      ``stats`` (this commit's harvest), kept for the live data and
+      delete dirs — delete dirs too, so the MoR read path's broadcast
+      gate answers from the manifest instead of listing them.
+    - ``renames`` are pruned to live dirs. They are never merged with
+      the parent's: that would resurrect entries a rename-back DDL
+      deliberately deleted. Dirs written this commit use current
+      logical names, so they simply have no entry.
+    - ``ndv`` sidecar pointers: the parent's overlaid with the change,
+      dropped for columns no longer in the schema (a rename or drop
+      invalidates them; dir-level staleness is computed at read time).
+    - ``history`` appends this commit to the parent's ancestor log (a
+      legacy parent without one seeds it with itself), capped by the
+      ``commit.history-max-entries`` property.
+
+    Copy rule: the containers a commit can edit (bucket dir lists,
+    delete entries and their covers, rename maps, properties, key) are
+    fresh, so callers may edit the result in place and nothing
+    reachable from a cached parent is ever mutated. Per-dir stats and
+    history entries, which no commit edits, are shared."""
+    base = (_content_of(parent) if parent is not None
+            else {"properties": {}, "deletes": {}, "renames": {}})
+    f = {**base, **changes}
+    buckets = {b: list(ds) for b, ds in f["buckets"].items()}
+    deletes = {
+        b: [{"dir": e["dir"], "covers": list(e["covers"])} for e in es]
+        for b, es in f["deletes"].items()
+    }
+    live = [d for ds in buckets.values() for d in ds] + [
+        e["dir"] for es in deletes.values() for e in es
+    ]
+    inherited = {**(parent.stats if parent else {}), **(stats or {})}
+    cols = set(T.StructType.fromJson(json.loads(f["schema_json"])).fieldNames())
+    ndv = {**(parent.ndv if parent else {}), **f.get("ndv", {})}
+    if parent is None:
+        hist = []
+    elif parent.history:
+        hist = list(parent.history)
+    else:
+        hist = [[parent.version, parent.timestamp]]
+    props = dict(f["properties"])
+    try:
+        cap = int(props.get("commit.history-max-entries", HISTORY_MAX_ENTRIES))
+    except (TypeError, ValueError):
+        cap = HISTORY_MAX_ENTRIES
+    version = parent.version + 1 if parent else 0
+    ts = _utcnow()
+    live_set = set(live)
+    return Snapshot(
+        version=version,
+        parent=parent.version if parent else None,
+        timestamp=ts,
+        operation=operation,
+        schema_json=f["schema_json"],
+        key=None if f["key"] is None else list(f["key"]),
+        n_buckets=f["n_buckets"],
+        buckets=buckets,
+        properties=props,
+        summary=f.get("summary", {}),
+        stats={d: inherited[d] for d in live if d in inherited},
+        deletes=deletes,
+        renames={d: dict(m) for d, m in f["renames"].items() if d in live_set and m},
+        ndv={c: p for c, p in ndv.items() if c in cols},
+        history=(hist + [[version, ts]])[-max(cap, 1):],
+    )
 
 
 # --------------------------------------------------------------------------
@@ -717,8 +811,7 @@ def _meta_cache(fs) -> dict:
     test doubles their own isolated cache for free and scopes the
     shared one to ``DEFAULT_FS``'s lifetime. Cached values are treated
     as IMMUTABLE by every consumer (the loader hands out fresh outer
-    dicts; commit builders copy inner lists before extending them —
-    the existing copy-on-write discipline of the builder closures)."""
+    dicts; :func:`evolve` copies every container a commit can edit)."""
     cache = getattr(fs, "_manifest_cache", None)
     if cache is None:
         cache = {"roots": OrderedDict(), "segments": OrderedDict(),
@@ -795,10 +888,10 @@ def _load_segment(fs, meta_dir: str, fname: str) -> dict:
 
 def _snapshot_from_doc(fs, meta_dir: str, doc: dict) -> Snapshot:
     """Materialize a :class:`Snapshot` from a parsed root doc, resolving
-    segment references. Outer dicts are FRESH per call (builders may
-    rebind/del keys); inner lists/dicts are shared with the cache and
-    must not be mutated in place — the invariant every commit builder
-    already keeps (``list(dirs)`` / ``dict(m)`` copies before edits)."""
+    segment references. Outer dicts are FRESH per call; inner
+    lists/dicts are shared with the cache and must not be mutated in
+    place — :func:`evolve`, the one place commits build snapshots,
+    copies them before anything can edit them."""
     doc = dict(doc)
     fmt = doc.pop("format", 1)
     refs = doc.pop("segments", None)
@@ -861,7 +954,7 @@ def _segment_payloads(snap: Snapshot) -> dict[str, dict]:
     """Split a snapshot's bulk into per-bucket segment payloads. ``None``
     marks "this bucket has no entry in that map" so reassembly is exact
     (an empty dir list is a real state on MoR tables). Stats/renames for
-    dirs no bucket owns (snapshots written outside ``_finalize_snapshot``,
+    dirs no bucket owns (snapshots written outside :func:`evolve`,
     e.g. clone manifests before their first commit) land in a catch-all
     ``"_"`` group rather than being dropped."""
     out: dict[str, dict] = {}
@@ -1090,79 +1183,21 @@ class LakeTable:
             )
         self.fs.replace_atomic(self.fs.join(self.meta_dir, "_current"), str(snap.version))
 
-    def _finalize_snapshot(self, snap: Snapshot, parent: Snapshot | None) -> Snapshot:
-        """Post-build snapshot fixup shared by direct commits and staged
-        transactional commits (``txn.CatalogTransaction``): attach
-        per-dir column stats and prune rename mappings. Leaves
-        ``_pending_stats`` in place — the caller clears it only once a
-        manifest actually publishes."""
-        # carry forward / attach per-dir column stats for the dirs
-        # that survive into this snapshot (data-skipping manifests)
-        inherited = dict(parent.stats) if parent else {}
-        inherited.update(self._pending_stats)
-        # delete dirs keep their stats too: the MoR read path's
-        # broadcast gate answers from the manifest (#bytes) instead of
-        # listing delete dirs on every query
-        snap.stats = {
-            d: inherited[d]
-            for d in snap.all_dirs() + snap.all_delete_dirs()
-            if d in inherited
-        }
-        # prune rename mappings to live dirs. Builders carry the
-        # parent's mappings forward explicitly (like ``deletes``) —
-        # merging here would resurrect entries a rename-back DDL
-        # deliberately deleted. Dirs (re)written this commit use
-        # current logical names, so they simply have no entry.
-        live = set(snap.all_dirs()) | set(snap.all_delete_dirs())
-        snap.renames = {
-            d: dict(m) for d, m in snap.renames.items() if d in live and m
-        }
-        # carry NDV sidecar pointers forward (an analyze commit sets its
-        # own entry; every other commit inherits the parent's). Entries
-        # for columns no longer in the schema are dropped — a rename or
-        # drop DDL invalidates the pointer (the sketches were keyed to
-        # the old logical name; re-analyze after a rename). Dir-level
-        # staleness is NOT checked here: it is recomputed at read time
-        # against the live dir set, so a compaction that rewrites dirs
-        # simply makes those sketch rows unreachable.
-        cols = set(
-            T.StructType.fromJson(json.loads(snap.schema_json)).fieldNames()
-        )
-        parent_ndv = parent.ndv if parent else {}
-        snap.ndv = {
-            c: p for c, p in {**parent_ndv, **snap.ndv}.items() if c in cols
-        }
-        # append self to the ancestor commit log (see Snapshot.history).
-        # A legacy parent without the field seeds it with the parent
-        # itself — version_as_of falls back to the scan for anything
-        # older. Capped so the root stays small at any commit count
-        # (entries for since-expired versions age out with the cap).
-        if parent is None:
-            hist = []
-        elif parent.history:
-            hist = list(parent.history)
-        else:
-            hist = [[parent.version, parent.timestamp]]
-        try:
-            cap = int(snap.properties.get(
-                "commit.history-max-entries", HISTORY_MAX_ENTRIES))
-        except (TypeError, ValueError):
-            cap = HISTORY_MAX_ENTRIES
-        snap.history = (hist + [[snap.version, snap.timestamp]])[-max(cap, 1):]
-        return snap
-
     def _commit(
-        self, build_snapshot, operation: str,
+        self, build, operation: str,
         txn_app: str | None = None, txn_version: int | None = None,
     ) -> Snapshot:
-        """Optimistic-retry commit: ``build_snapshot(parent) -> Snapshot``.
-        ``txn_app``/``txn_version`` make the write idempotent (exactly-
-        once under foreachBatch replay) — see :func:`_txn_wrap`."""
-        build_snapshot = _txn_wrap(build_snapshot, txn_app, txn_version)
+        """Optimistic-retry commit: ``build(parent)`` returns the fields
+        the commit changes and :func:`evolve` builds the snapshot; per-dir
+        stats harvested by this table's writes ride along and are cleared
+        once a manifest publishes. ``txn_app``/``txn_version`` make the
+        write idempotent (exactly-once under foreachBatch replay) — see
+        :func:`_txn_wrap`."""
+        build = _txn_wrap(build, txn_app, txn_version)
         for attempt in range(COMMIT_RETRIES + 1):
             parent = self.snapshot() if self.exists() else None
             try:
-                snap = self._finalize_snapshot(build_snapshot(parent), parent)
+                snap = evolve(parent, operation, build(parent), self._pending_stats)
             except _AlreadyApplied as done:
                 return done.snap
             # Publish-side GC-grace gate: a commit whose freshly-written
@@ -2746,27 +2781,8 @@ class LakeTable:
         # left the CURRENT snapshot, so stats inheritance alone (which
         # carries parent stats) would drop them
         self._pending_stats.update(target.stats)
-
-        def build(parent):
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="rollback",
-                schema_json=target.schema_json,
-                key=target.key,
-                n_buckets=target.n_buckets,
-                buckets={b: list(d) for b, d in target.buckets.items()},
-                properties=dict(target.properties),
-                summary={"rolled_back_to": version},
-                deletes={
-                    b: [{"dir": e["dir"], "covers": list(e["covers"])} for e in es]
-                    for b, es in target.deletes.items()
-                },
-                renames={d: dict(m) for d, m in target.renames.items()},
-            )
-
-        return self._commit(build, "rollback")
+        changes = {**_content_of(target), "summary": {"rolled_back_to": version}}
+        return self._commit(lambda parent: changes, "rollback")
 
     # --------------------------------------------------- write-audit-publish
     def _staged_dir(self) -> str:
@@ -2872,23 +2888,10 @@ class LakeTable:
 
         def build(parent):
             self._check_staged_layout(doc, parent)
-            merged = {b: list(dirs) for b, dirs in parent.buckets.items()}
-            for b, dirs in doc["buckets"].items():
-                merged.setdefault(b, []).extend(dirs)
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="publish",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=merged,
-                properties=parent.properties,
-                summary={"wap_id": wap_id, "base_version": doc["base_version"]},
-                deletes=parent.deletes,
-                renames=parent.renames,
-            )
+            return {
+                "buckets": _extend(parent.buckets, doc["buckets"]),
+                "summary": {"wap_id": wap_id, "base_version": doc["base_version"]},
+            }
 
         snap = self._commit(build, "publish")
         self.fs.remove(self._staged_path(wap_id))
@@ -2935,23 +2938,13 @@ class LakeTable:
         br._pending_stats.update(base.stats)
 
         def build(parent):
-            return Snapshot(
-                version=0,
-                parent=None,
-                timestamp=_utcnow(),
-                operation="fork",
-                schema_json=base.schema_json,
-                key=base.key,
-                n_buckets=base.n_buckets,
-                buckets={b: list(d) for b, d in base.buckets.items()},
-                properties=dict(base.properties),
-                summary={"forked_from": v},
-                deletes={
-                    b: [{"dir": e["dir"], "covers": list(e["covers"])} for e in es]
-                    for b, es in base.deletes.items()
-                },
-                renames={d: dict(m) for d, m in base.renames.items()},
-            )
+            # the fork is the branch's v0 root: a branch of the same
+            # name created meanwhile wins, never gets a fork stacked on it
+            if parent is not None:
+                raise CommitConflict(
+                    f"branch {name!r} was created concurrently on {self.location}"
+                )
+            return {**_content_of(base), "summary": {"forked_from": v}}
 
         br._commit(build, "fork")
         # fork base lives in its own file (not the v0 summary) so
@@ -3003,23 +2996,10 @@ class LakeTable:
                     f"branch forked from v{fork_base} — re-fork to pick up "
                     f"the intervening main commits"
                 )
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="fast_forward",
-                schema_json=head.schema_json,
-                key=head.key,
-                n_buckets=head.n_buckets,
-                buckets={b: list(d) for b, d in head.buckets.items()},
-                properties=dict(head.properties),
-                summary={"fast_forward_from": name, "branch_head": head.version},
-                deletes={
-                    b: [{"dir": e["dir"], "covers": list(e["covers"])} for e in es]
-                    for b, es in head.deletes.items()
-                },
-                renames={d: dict(m) for d, m in head.renames.items()},
-            )
+            return {
+                **_content_of(head),
+                "summary": {"fast_forward_from": name, "branch_head": head.version},
+            }
 
         return self._commit(build, "fast_forward")
 
@@ -3043,21 +3023,13 @@ class LakeTable:
         finally:
             self._pending_props = None
 
-        def build(parent):
-            return Snapshot(
-                version=(parent.version + 1) if parent else 0,
-                parent=parent.version if parent else None,
-                timestamp=_utcnow(),
-                operation="create_or_replace",
-                schema_json=df.schema.json(),
-                key=key,
-                n_buckets=nb,
-                buckets=buckets,
-                properties=properties or (parent.properties if parent else {}),
-                summary={},
-            )
-
-        return self._commit(build, "create_or_replace")
+        # a replace drops the old table's eras and renames; it keeps
+        # the old properties unless new ones are given
+        changes = {"schema_json": df.schema.json(), "key": key, "n_buckets": nb,
+                   "buckets": buckets, "deletes": {}, "renames": {}}
+        if properties:
+            changes["properties"] = properties
+        return self._commit(lambda parent: changes, "create_or_replace")
 
     def append(self, df: DataFrame, txn_app: str | None = None,
                txn_version: int | None = None) -> Snapshot:
@@ -3072,26 +3044,10 @@ class LakeTable:
         cur = self.snapshot()
         new = self._write_bucketed(df, cur.key, cur.n_buckets)
 
+        # appended dirs are NOT covered by existing deletes (covers pins
+        # them to their commit era), so the eras carry as-is
         def build(parent):
-            merged = {b: list(dirs) for b, dirs in parent.buckets.items()}
-            for b, dirs in new.items():
-                merged.setdefault(b, []).extend(dirs)
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="append",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=merged,
-                properties=parent.properties,
-                summary={},
-                # appended dirs are NOT covered by existing deletes
-                # (covers pins them to their commit era), carry as-is
-                deletes=parent.deletes,
-                renames=parent.renames,
-            )
+            return {"buckets": _extend(parent.buckets, new)}
 
         return self._commit(build, "append", txn_app=txn_app, txn_version=txn_version)
 
@@ -3249,24 +3205,11 @@ class LakeTable:
                     "rewritten buckets; re-run the operation"
                 )
             merged = {b: dirs for b, dirs in parent.buckets.items() if b not in affected_s}
-            for b, dirs in per_bucket.items():
-                merged[b] = dirs
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation=operation,
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=merged,
-                properties=parent.properties,
-                summary=summary,
-                # CoW rewrites replace the covered dirs, so delete
-                # entries whose covers vanished are dropped here
-                deletes=_prune_deletes(parent.deletes, merged),
-                renames=parent.renames,
-            )
+            merged.update(per_bucket)
+            # CoW rewrites replace the covered dirs, so delete entries
+            # whose covers vanished are dropped here
+            return {"buckets": merged, "summary": summary,
+                    "deletes": _prune_deletes(parent.deletes, merged)}
 
         return self._commit(build, operation, txn_app=txn_app, txn_version=txn_version)
 
@@ -3624,34 +3567,21 @@ class LakeTable:
         )
 
         def build(parent):
-            eras = {b: list(entries) for b, entries in parent.deletes.items()}
-            buckets = {b: list(d) for b, d in parent.buckets.items()}
-            touched = []
+            eras, touched = {}, []
             for b in sorted(set(key_dirs) | set(data_dirs), key=int):
                 covers = parent.buckets.get(b, [])
                 if covers:
-                    eras.setdefault(b, []).extend(
-                        {"dir": d, "covers": list(covers)}
+                    eras[b] = [
+                        {"dir": d, "covers": covers}
                         for d in key_dirs.get(b, []) + data_dirs.get(b, [])
-                    )
-                if b in data_dirs:
-                    buckets[b] = buckets.get(b, []) + data_dirs[b]
+                    ]
                 if covers or b in data_dirs:
                     touched.append(int(b))
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation=operation,
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=buckets,
-                properties=parent.properties,
-                summary={"affected_buckets": touched, "mode": "merge-on-read"},
-                deletes=eras,
-                renames=parent.renames,
-            )
+            return {
+                "buckets": _extend(parent.buckets, data_dirs),
+                "deletes": _extend(parent.deletes, eras),
+                "summary": {"affected_buckets": touched, "mode": "merge-on-read"},
+            }
 
         return self._commit(build, operation, txn_app=txn_app, txn_version=txn_version)
 
@@ -3691,52 +3621,57 @@ class LakeTable:
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown delete mode {mode!r}")
         snap = self.snapshot()
-        # dict = the explicit {"or"}/{"and"} markers — same tuple
-        # vocabulary as the list forms, same dir pruning
-        filters = condition if isinstance(condition, (list, dict)) else None
-        if filters is not None:
-            dnf = _norm_dnf(filters)  # once, not per dir
-            cond = _dnf_expr(dnf)
-            touched: dict[str, list[str]] = {}
-            kept: dict[str, list[str]] = {}
-            for bs, dirs in snap.buckets.items():
-                t = [
-                    d
-                    for d in dirs
-                    if self._dir_may_match_dnf(
-                        snap.stats.get(d, {}), dnf, snap.renames.get(d)
-                    )
-                ]
-                if t:
-                    touched[bs] = t
-                    kept[bs] = [d for d in dirs if d not in set(t)]
-        else:
-            cond = F.expr(condition) if isinstance(condition, str) else condition
-            touched = {b: list(d) for b, d in snap.buckets.items() if d}
-            kept = {}
+        cond, touched, kept = self._predicate_dirs(snap, condition)
+        if mode == "merge-on-read":
+            return self._commit_where_mor(
+                snap, touched, kept, "delete",
+                lambda df: df.filter(cond).select(*snap.key).distinct(),
+            )
         summary = {
             "pruned_dirs": sum(len(v) for v in kept.values()),
             "touched_dirs": sum(len(v) for v in touched.values()),
             "mode": mode,
         }
-        if mode == "merge-on-read":
-            return self._delete_where_mor(snap, touched, cond, summary)
-        affected = sorted(int(b) for b in touched)
-        if any(snap.deletes.get(b) for b in touched):
-            df = self._read_with_deletes(snap, touched)
-        elif touched:
-            df = self._read_dirs([d for ds in touched.values() for d in ds], snap)
-        else:
+        if not touched:
             return self._replace_buckets(snap, {}, [], "delete", summary)
+        affected = sorted(int(b) for b in touched)
         # SQL DELETE semantics: remove rows where cond IS TRUE — a row
         # where the predicate evaluates NULL survives (~NULL is NULL and
         # filter() would wrongly drop it)
-        remaining = df.filter(~cond | cond.isNull())
+        remaining = self._read_with_deletes(snap, touched).filter(~cond | cond.isNull())
         new_dirs = self._write_bucketed(remaining, snap.key, snap.n_buckets)
         per_bucket = {
             str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
         }
         return self._replace_buckets(snap, per_bucket, affected, "delete", summary)
+
+    def _predicate_dirs(
+        self, snap: Snapshot, condition
+    ) -> tuple[Any, dict[str, list[str]], dict[str, list[str]]]:
+        """The predicate-DML front end: ``(cond, touched, kept)`` for a
+        ``delete_where``/``update_where`` condition against ``snap``.
+        The ``(col, op, value)`` list/dict forms become one Column and
+        prune dirs by footer stats (DNF: a dir is touched when any
+        branch may match); ``kept`` holds the pruned dirs of touched
+        buckets. A SQL string or Column touches every non-empty bucket."""
+        if not isinstance(condition, (list, dict)):
+            cond = F.expr(condition) if isinstance(condition, str) else condition
+            return cond, {b: d for b, d in snap.buckets.items() if d}, {}
+        dnf = _norm_dnf(condition)  # once, not per dir
+        touched: dict[str, list[str]] = {}
+        kept: dict[str, list[str]] = {}
+        for bs, dirs in snap.buckets.items():
+            t = [
+                d
+                for d in dirs
+                if self._dir_may_match_dnf(
+                    snap.stats.get(d, {}), dnf, snap.renames.get(d)
+                )
+            ]
+            if t:
+                touched[bs] = t
+                kept[bs] = [d for d in dirs if d not in set(t)]
+        return _dnf_expr(dnf), touched, kept
 
     def _check_new_delete_eras(
         self, snap: Snapshot, parent: Snapshot,
@@ -3762,75 +3697,63 @@ class LakeTable:
                         "against the current snapshot"
                     )
 
-    def _delete_where_mor(
-        self, snap: Snapshot, touched: dict[str, list[str]], cond, summary: dict
+    def _commit_where_mor(
+        self, snap: Snapshot, touched: dict[str, list[str]],
+        kept: dict[str, list[str]], kind: str, rows_of,
     ) -> Snapshot:
-        """Merge-on-read predicate delete: one pruned scan projects the
-        matching rows' keys; they commit as an equality-delete era whose
-        ``covers`` is exactly the touched dirs (pruned dirs never pay
-        the read-side anti-join). See ``delete_where`` for semantics."""
+        """Merge-on-read predicate DML, shared by ``delete_where``
+        (``kind="delete"``) and ``update_where`` (``kind="update"``):
+        one pruned scan of the touched dirs, which ``rows_of`` turns
+        into what the commit writes — the matched rows' keys, landing
+        as key-only delete dirs, or the updated matched rows, landing
+        as data dirs that double as the equality-delete key source (the
+        ``_commit_mor`` layout). The eras ``covers`` exactly the touched
+        dirs, so pruned dirs never pay the read-side anti-join. Unlike
+        ``_commit_mor``'s eras, which cover every dir live at commit
+        (newest-key-wins), a predicate match on unseen rows was never
+        evaluated. See ``delete_where`` for the concurrency stance."""
+        api = f"{kind}_where"
+        operation = f"{kind}-mor"
         if not snap.key:
-            raise ValueError("merge-on-read delete_where requires a keyed table")
+            raise ValueError(f"merge-on-read {api} requires a keyed table")
+        summary = {
+            "pruned_dirs": sum(len(v) for v in kept.values()),
+            "touched_dirs": sum(len(v) for v in touched.values()),
+            "mode": "merge-on-read",
+        }
         if not touched:
-            def build_noop(parent):
-                return Snapshot(
-                    version=parent.version + 1,
-                    parent=parent.version,
-                    timestamp=_utcnow(),
-                    operation="delete-mor",
-                    schema_json=parent.schema_json,
-                    key=parent.key,
-                    n_buckets=parent.n_buckets,
-                    buckets={b: list(d) for b, d in parent.buckets.items()},
-                    properties=parent.properties,
-                    summary=summary,
-                    deletes=parent.deletes,
-                    renames=parent.renames,
-                )
-            return self._commit(build_noop, "delete-mor")
-        if any(snap.deletes.get(b) for b in touched):
-            df = self._read_with_deletes(snap, touched)
-        else:
-            df = self._read_dirs([d for ds in touched.values() for d in ds], snap)
-        keys_df = df.filter(cond).select(*snap.key).distinct()
-        new_dirs = self._write_bucketed(keys_df, snap.key, snap.n_buckets)
+            return self._commit(lambda parent: {"summary": summary}, operation)
+        rows = rows_of(self._read_with_deletes(snap, touched))
+        new_dirs = self._write_bucketed(rows, snap.key, snap.n_buckets)
+        as_data = kind == "update"
 
         def build(parent):
-            deletes = {b: list(entries) for b, entries in parent.deletes.items()}
-            affected = []
             for b, t_dirs in touched.items():
-                live = set(parent.buckets.get(b, []))
-                if not set(t_dirs) <= live:
+                if not set(t_dirs) <= set(parent.buckets.get(b, [])):
                     # a touched dir was rewritten under us — its rows may
                     # no longer match the predicate we evaluated
                     raise CommitConflict(
-                        f"delete_where on {self.location}: concurrent writer "
-                        f"rewrote a predicate-matched dir; re-run the delete"
+                        f"{api} on {self.location}: concurrent writer "
+                        f"rewrote a predicate-matched dir; re-run the {kind}"
                     )
-            self._check_new_delete_eras(snap, parent, touched, "delete_where")
-            for b, t_dirs in touched.items():
-                for d in new_dirs.get(b, []):
-                    deletes.setdefault(b, []).append(
-                        {"dir": d, "covers": list(t_dirs)}
-                    )
-                if new_dirs.get(b):
-                    affected.append(int(b))
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="delete-mor",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets={b: list(d) for b, d in parent.buckets.items()},
-                properties=parent.properties,
-                summary={**summary, "affected_buckets": sorted(affected)},
-                deletes=deletes,
-                renames=parent.renames,
-            )
+            # a concurrent MoR delete era on a touched dir: a delete
+            # would double-apply on a changed base, an update would
+            # resurrect the deleted keys with its new values
+            self._check_new_delete_eras(snap, parent, touched, api)
+            eras = {
+                b: [{"dir": d, "covers": touched[b]} for d in dirs]
+                for b, dirs in new_dirs.items() if touched.get(b)
+            }
+            affected = sorted(int(b) for b in new_dirs if as_data or touched.get(b))
+            changes = {
+                "deletes": _extend(parent.deletes, eras),
+                "summary": {**summary, "affected_buckets": affected},
+            }
+            if as_data:
+                changes["buckets"] = _extend(parent.buckets, new_dirs)
+            return changes
 
-        return self._commit(build, "delete-mor")
+        return self._commit(build, operation)
 
     def update_where(self, condition, assignments: dict[str, Any],
                      mode: str = "copy-on-write") -> Snapshot:
@@ -3870,52 +3793,34 @@ class LakeTable:
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown update mode {mode!r}")
         snap = self.snapshot()
-        # dict = the explicit {"or"}/{"and"} markers — same tuple
-        # vocabulary as the list forms, same dir pruning
-        filters = condition if isinstance(condition, (list, dict)) else None
-        if filters is not None:
-            dnf = _norm_dnf(filters)  # once, not per dir
-            cond = _dnf_expr(dnf)
-            touched: dict[str, list[str]] = {}
-            kept: dict[str, list[str]] = {}
-            for bs, dirs in snap.buckets.items():
-                t = [
-                    d
-                    for d in dirs
-                    if self._dir_may_match_dnf(
-                        snap.stats.get(d, {}), dnf, snap.renames.get(d)
-                    )
-                ]
-                if t:
-                    touched[bs] = t
-                    kept[bs] = [d for d in dirs if d not in set(t)]
-            affected = sorted(int(b) for b in touched)
-        else:
-            cond = F.expr(condition) if isinstance(condition, str) else condition
-            touched = {b: list(d) for b, d in snap.buckets.items() if d}
-            kept = {}
-            affected = list(range(snap.n_buckets))
+        filtered = isinstance(condition, (list, dict))
+        cond, touched, kept = self._predicate_dirs(snap, condition)
         if mode == "merge-on-read":
-            summary = {
-                "pruned_dirs": sum(len(v) for v in kept.values()),
-                "touched_dirs": sum(len(v) for v in touched.values()),
-                "mode": mode,
-            }
-            return self._update_where_mor(snap, touched, cond, assignments, summary)
-        if filters is not None:
-            if any(snap.deletes.get(b) for b in touched):
-                df = self._read_with_deletes(snap, touched)
-            else:
-                df = self._read_dirs(
-                    [d for ds in touched.values() for d in ds], snap
+            bad = sorted(set(assignments) & set(snap.key or []))
+            if bad:
+                raise ValueError(
+                    f"merge-on-read update_where cannot assign key columns {bad}: "
+                    "the mask is keyed on the new row's key, so a key change "
+                    "would leave the old row unmasked — use copy-on-write"
                 )
-        else:
-            df = self.read()
+
+            def matched_rows(df):
+                df = df.filter(cond)
+                for col, val in assignments.items():
+                    expr = F.expr(val) if isinstance(val, str) else F.lit(val)
+                    df = df.withColumn(col, expr)
+                # CHECK constraints gate exactly the rows this UPDATE changes
+                self._enforce_constraints(df, "update_where")
+                return self._align(df)
+
+            return self._commit_where_mor(
+                snap, touched, kept, "update", matched_rows
+            )
         # per-call unique helper name — same collision-proofing as the
         # partial-merge __matched/__t_* columns (a table may legitimately
         # contain a column named "__upd")
         upd_col = f"__upd_{uuid.uuid4().hex[:8]}"
-        df = df.withColumn(upd_col, cond)
+        df = self._read_with_deletes(snap, touched).withColumn(upd_col, cond)
         for col, val in assignments.items():
             expr = F.expr(val) if isinstance(val, str) else F.lit(val)
             df = df.withColumn(col, F.when(F.col(upd_col), expr).otherwise(F.col(col)))
@@ -3924,6 +3829,9 @@ class LakeTable:
         self._enforce_constraints(df.where(F.col(upd_col)), "update_where")
         updated = self._align(df.drop(upd_col))
         new_dirs = self._write_bucketed(updated, snap.key, snap.n_buckets)
+        affected = (
+            sorted(int(b) for b in touched) if filtered else list(range(snap.n_buckets))
+        )
         per_bucket = {
             str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
         }
@@ -3932,99 +3840,10 @@ class LakeTable:
                 "pruned_dirs": sum(len(v) for v in kept.values()),
                 "rewritten_dirs": sum(len(v) for v in touched.values()),
             }
-            if filters is not None
+            if filtered
             else {}
         )
         return self._replace_buckets(snap, per_bucket, affected, "update", summary)
-
-    def _update_where_mor(
-        self, snap: Snapshot, touched: dict[str, list[str]], cond,
-        assignments: dict[str, Any], summary: dict,
-    ) -> Snapshot:
-        """Merge-on-read predicate UPDATE: one pruned scan selects the
-        matched rows, the assignments apply to THOSE rows only, and
-        they commit as new data dirs that double as the equality-delete
-        key source (the ``_commit_mor`` layout) with ``covers`` =
-        exactly the touched dirs. See ``update_where`` for semantics."""
-        if not snap.key:
-            raise ValueError("merge-on-read update_where requires a keyed table")
-        bad = sorted(set(assignments) & set(snap.key))
-        if bad:
-            raise ValueError(
-                f"merge-on-read update_where cannot assign key columns {bad}: "
-                "the mask is keyed on the new row's key, so a key change "
-                "would leave the old row unmasked — use copy-on-write"
-            )
-        if not touched:
-            def build_noop(parent):
-                return Snapshot(
-                    version=parent.version + 1,
-                    parent=parent.version,
-                    timestamp=_utcnow(),
-                    operation="update-mor",
-                    schema_json=parent.schema_json,
-                    key=parent.key,
-                    n_buckets=parent.n_buckets,
-                    buckets={b: list(d) for b, d in parent.buckets.items()},
-                    properties=parent.properties,
-                    summary=summary,
-                    deletes=parent.deletes,
-                    renames=parent.renames,
-                )
-            return self._commit(build_noop, "update-mor")
-        if any(snap.deletes.get(b) for b in touched):
-            df = self._read_with_deletes(snap, touched)
-        else:
-            df = self._read_dirs([d for ds in touched.values() for d in ds], snap)
-        matched = df.filter(cond)
-        for col, val in assignments.items():
-            expr = F.expr(val) if isinstance(val, str) else F.lit(val)
-            matched = matched.withColumn(col, expr)
-        # CHECK constraints gate exactly the rows this UPDATE changes
-        self._enforce_constraints(matched, "update_where")
-        updated = self._align(matched)
-        new_dirs = self._write_bucketed(updated, snap.key, snap.n_buckets)
-
-        def build(parent):
-            deletes = {b: list(entries) for b, entries in parent.deletes.items()}
-            buckets = {b: list(d) for b, d in parent.buckets.items()}
-            affected = []
-            for b, t_dirs in touched.items():
-                live = set(parent.buckets.get(b, []))
-                if not set(t_dirs) <= live:
-                    raise CommitConflict(
-                        f"update_where on {self.location}: concurrent writer "
-                        f"rewrote a predicate-matched dir; re-run the update"
-                    )
-            # concurrent MoR delete era on a touched dir would resurrect
-            # the keys it deleted with this update's new values
-            self._check_new_delete_eras(snap, parent, touched, "update_where")
-            for b, dirs in new_dirs.items():
-                covers = list(touched.get(b, []))
-                for d in dirs:
-                    if covers:
-                        deletes.setdefault(b, []).append(
-                            {"dir": d, "covers": covers}
-                        )
-                buckets.setdefault(b, [])
-                buckets[b] = buckets[b] + dirs
-                affected.append(int(b))
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="update-mor",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=buckets,
-                properties=parent.properties,
-                summary={**summary, "affected_buckets": sorted(affected)},
-                deletes=deletes,
-                renames=parent.renames,
-            )
-
-        return self._commit(build, "update-mor")
 
     # ------------------------------------------------------------------ maintenance
     def rebucket(self, new_n_buckets: int) -> Snapshot:
@@ -4068,7 +3887,7 @@ class LakeTable:
             for b, entries in snap.deletes.items():
                 nb = str(int(b) % new_n_buckets)
                 deletes.setdefault(nb, []).extend(entries)
-            renames = {d: dict(m) for d, m in snap.renames.items()}
+            changes = {"buckets": buckets, "deletes": deletes}
         else:
             df = self.read()  # folds MoR deletes, applies renames
             if new_n_buckets % snap.n_buckets == 0:
@@ -4090,8 +3909,9 @@ class LakeTable:
                 self._harvest_stats([d for dirs in buckets.values() for d in dirs])
             else:
                 buckets = self._write_bucketed(df, snap.key, new_n_buckets)
-            deletes = {}  # folded into the rewrite by the read
-            renames = {}  # rewritten dirs carry current logical names
+            # the read folded the deletes in, and rewritten dirs carry
+            # current logical names
+            changes = {"buckets": buckets, "deletes": {}, "renames": {}}
 
         def build(parent):
             # rebucket replaces the WHOLE table layout from the snapshot
@@ -4104,23 +3924,11 @@ class LakeTable:
                     f"v{snap.version} to v{parent.version if parent else None} "
                     "during the rewrite; re-run rebucket"
                 )
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="rebucket",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=new_n_buckets,
-                buckets=buckets,
-                properties=parent.properties,
-                summary={
-                    "from_buckets": snap.n_buckets,
-                    "to_buckets": new_n_buckets,
-                },
-                deletes=deletes,
-                renames=renames,
-            )
+            return {
+                **changes,
+                "n_buckets": new_n_buckets,
+                "summary": {"from_buckets": snap.n_buckets, "to_buckets": new_n_buckets},
+            }
 
         return self._commit(build, "rebucket")
 
@@ -4234,29 +4042,18 @@ class LakeTable:
 
     # ------------------------------------------------------------------ DDL (metadata-only)
     def _commit_metadata(self, mutate, operation: str) -> Snapshot:
-        """Metadata-only commit: copy the parent snapshot, let ``mutate``
-        edit it in place (properties / schema metadata), commit. Data
-        dirs are untouched, so this is O(manifest) at any table size."""
+        """Metadata-only commit: ``mutate`` edits a working copy of the
+        parent in place (properties / schema metadata) — :func:`evolve`
+        makes it, so the edits cannot reach the cached parent — and the
+        edited fields commit. Data dirs are untouched, so this is
+        O(manifest) at any table size."""
 
         def build(parent):
             if parent is None:
                 raise ValueError(f"table {self.location} does not exist")
-            snap = Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation=operation,
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets={b: list(d) for b, d in parent.buckets.items()},
-                properties=dict(parent.properties),
-                summary={},
-                deletes=parent.deletes,
-                renames={d: dict(m) for d, m in parent.renames.items()},
-            )
-            mutate(snap)
-            return snap
+            work = evolve(parent, operation, {"summary": {}})
+            mutate(work)
+            return {f: getattr(work, f) for f in (*_CARRIED, "summary", "ndv")}
 
         return self._commit(build, operation)
 

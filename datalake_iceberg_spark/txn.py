@@ -74,6 +74,8 @@ from datalake_iceberg_spark.tables import (
     LakeTable,
     Snapshot,
     _AlreadyApplied,
+    _txn_wrap,
+    evolve,
     manifest_text_for,
 )
 
@@ -93,14 +95,12 @@ class _StagedTable(LakeTable):
     def __init__(self, spark, location, fs, txn):
         super().__init__(spark, location, fs=fs)
         self._txn = txn
-        self._staged = None  # (build_snapshot, operation)
+        self._staged = None  # (build, operation)
 
     def _commit(
-        self, build_snapshot, operation: str,
+        self, build, operation: str,
         txn_app: str | None = None, txn_version: int | None = None,
     ) -> Snapshot:
-        from datalake_iceberg_spark.tables import _txn_wrap
-
         if self._staged is not None:
             raise ValueError(
                 f"transaction already stages {self._staged[1]!r} on "
@@ -108,10 +108,10 @@ class _StagedTable(LakeTable):
                 "— a second would need to read its own uncommitted "
                 "predecessor. Commit first, or use a second transaction."
             )
-        build_snapshot = _txn_wrap(build_snapshot, txn_app, txn_version)
+        build = _txn_wrap(build, txn_app, txn_version)
         parent = self.snapshot() if self.exists() else None
-        preview = self._finalize_snapshot(build_snapshot(parent), parent)
-        self._staged = (build_snapshot, operation)
+        preview = evolve(parent, operation, build(parent), self._pending_stats)
+        self._staged = (build, operation)
         return preview
 
 
@@ -161,7 +161,7 @@ class CatalogTransaction:
             return {}
         for attempt in range(COMMIT_RETRIES + 1):
             built: list[tuple[_StagedTable, Snapshot, Snapshot | None]] = []
-            for t, build, _op in staged:
+            for t, build, op in staged:
                 parent = t.snapshot() if t.exists() else None
                 # per-op conflict detection (bucket overlap etc.) raises
                 # CommitConflict here and aborts the transaction — the
@@ -169,7 +169,7 @@ class CatalogTransaction:
                 # metadata alone cannot fix it
                 try:
                     built.append(
-                        (t, t._finalize_snapshot(build(parent), parent), parent)
+                        (t, evolve(parent, op, build(parent), t._pending_stats), parent)
                     )
                 except _AlreadyApplied:
                     # idempotent write already landed (txn_app/version

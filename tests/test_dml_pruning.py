@@ -367,7 +367,7 @@ def test_delete_where_mor_conflicts_with_concurrent_rewrite(catalog, spark):
     """Predicate semantics are as-of-snapshot: if a touched dir is
     rewritten between the predicate scan and the commit, the era must
     NOT publish (the rewritten rows may no longer match). Simulated by
-    driving _delete_where_mor with a stale touched-set after an
+    driving the MoR predicate commit with a stale touched-set after an
     update_where replaced those dirs."""
     from datalake_iceberg_spark import tables as tb
 
@@ -387,7 +387,10 @@ def test_delete_where_mor_conflicts_with_concurrent_rewrite(catalog, spark):
     # concurrent writer rewrites (part of) the touched range
     t.update_where([("id", ">=", 290)], {"v": "'raced'"})
     with pytest.raises(tb.CommitConflict, match="rewrote a predicate-matched dir"):
-        t._delete_where_mor(snap, touched, cond, {"mode": "merge-on-read"})
+        t._commit_where_mor(
+            snap, touched, {}, "delete",
+            lambda df: df.filter(cond).select("id").distinct(),
+        )
     # nothing published: the race left the table exactly post-update
     got = _rows(t.read())
     assert got == {(i, "raced" if i >= 290 else f"v{i}") for i in range(300)}
@@ -413,7 +416,10 @@ def test_delete_where_mor_concurrent_append_not_covered(catalog, spark):
     }
     touched = {b: ds for b, ds in touched.items() if ds}
     t.append(spark.createDataFrame([Row(id=500, v="late")]))  # matches id>=250
-    t._delete_where_mor(snap, touched, cond, {"mode": "merge-on-read"})
+    t._commit_where_mor(
+        snap, touched, {}, "delete",
+        lambda df: df.filter(cond).select("id").distinct(),
+    )
     got = _rows(t.read())
     want = {(i, f"v{i}") for i in range(250)} | {(500, "late")}
     assert got == want

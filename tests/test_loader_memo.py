@@ -38,3 +38,23 @@ def test_schema_memo_hit_serves_same_schema(spark, tmp_path):
     s2 = q.load(spark, d, "u").schema  # memo hit
     assert s1 == s2
     assert q.load(spark, d, "u").count() == 3
+
+
+def test_scan_parts_memo_keeps_one_entry_per_fixture(spark, tmp_path):
+    """Regenerating one fixture in-process replaces its partition-count
+    memo entry instead of adding one per fingerprint, and both memos
+    refresh every time — with no mtime nudge: the fingerprint folds in
+    the part files' names and sizes."""
+    d = str(tmp_path)
+    path = f"{d}/r.parquet"
+    for n in (1, 2, 3):
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        spark.range(30).selectExpr(
+            *[f"id AS c{i}" for i in range(n)]
+        ).repartition(n).write.parquet(path)
+        df = q.load_balanced(spark, d, "r")
+        assert [f.name for f in df.schema.fields] == [f"c{i}" for i in range(n)]
+        entries = [v for k, v in q._SCAN_PARTS_CACHE.items() if k[0] == path]
+        assert len(entries) == 1
+        assert entries[0][1] == n  # one split per part file

@@ -9,7 +9,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from datalake_iceberg_spark.functions.keys import SURROGATE_KEY_COL, surrogate_key
-from datalake_iceberg_spark.ops.maintenance import MaintenanceService
+from datalake_iceberg_spark.ops.maintenance import MaintenanceService, ProcessedTableTracker
 from datalake_iceberg_spark.ops.watermark import WatermarkStore
 from datalake_iceberg_spark.streaming.runner import (
     CdcStreamRunner,
@@ -88,6 +88,11 @@ def test_maintenance_service_records_and_gates(catalog, store, spark):
     assert recent["status"] == "skipped"
     statuses = {r.procedure_type: r.status for r in store.maintenance().read().collect()}
     assert statuses["rewrite_data_files"] in ("success", "skipped")
+    # the tracker feeding the compaction phase: sorted, de-duplicated
+    tracker = ProcessedTableTracker()
+    for name in ("default.mt", "default.a", "default.mt"):
+        tracker.mark(name)
+    assert tracker.modified() == ["default.a", "default.mt"]
 
 
 def _write_envelopes(path, events, part):
